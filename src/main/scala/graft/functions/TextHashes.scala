@@ -11,19 +11,40 @@ import java.util.Arrays
 object TextHashes {
 
   /** Overlapping n-char grams of the RAW text as strings (no
-    * normalization — the caller decides), one pass over the UTF8String
-    * by character index so surrogate pairs never split. Static and
+    * normalization — the caller decides), in one pass over the bytes: the
+    * char start offsets are stepped through once with
+    * `UTF8String.numBytesForFirstByte` (the step `substring` and `numChars`
+    * use, so surrogate pairs never split and invalid bytes count as
+    * `numChars` counts them) and each gram is sliced from two of them. A
+    * truncated sequence at the end is cut at the last byte. Static and
     * Java-callable for [[GraftFunctions.CharGramsExpr]]'s generated code. */
   def charGrams(s: org.apache.spark.unsafe.types.UTF8String, n: Int)
       : org.apache.spark.sql.catalyst.util.GenericArrayData = {
-    val m = s.numChars() - n + 1
+    import org.apache.spark.unsafe.types.UTF8String
+    val chars = s.numChars()
+    val m = chars - n + 1
     if (m <= 0)
       return new org.apache.spark.sql.catalyst.util.GenericArrayData(new Array[Any](0))
     val arr = new Array[Any](m)
+    if (n <= 0) {
+      Arrays.fill(arr.asInstanceOf[Array[AnyRef]], UTF8String.EMPTY_UTF8)
+      return new org.apache.spark.sql.catalyst.util.GenericArrayData(arr)
+    }
+    val bytes = s.getBytes
+    // starts(c): byte offset of char c; starts(chars): the end
+    val starts = new Array[Int](chars + 1)
     var i = 0
-    while (i < m) {
-      arr(i) = s.substring(i, i + n)
-      i += 1
+    var c = 0
+    while (c < chars) {
+      starts(c) = i
+      i += UTF8String.numBytesForFirstByte(bytes(i))
+      c += 1
+    }
+    starts(chars) = math.min(i, bytes.length)
+    c = 0
+    while (c < m) {
+      arr(c) = UTF8String.fromBytes(Arrays.copyOfRange(bytes, starts(c), starts(c + n)))
+      c += 1
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(arr)
   }

@@ -1,44 +1,11 @@
 package graft.source
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
 import org.apache.spark.sql.connector.read.InputPartition
 import org.apache.spark.sql.connector.read.streaming.{ContinuousPartitionReader, ContinuousPartitionReaderFactory, ContinuousStream, Offset, PartitionOffset}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.config.GraftOptions
-
-/**
- * Column-pruned Message→InternalRow projection shared by the micro-batch
- * and continuous readers: one extractor per REQUIRED column only.
- */
-class QueueRowProjector(topic: String, queueId: Int, requiredSchema: StructType)
-    extends Serializable {
-  private val extractors: Array[(Long, Message) => Any] =
-    requiredSchema.fieldNames.map {
-      case "topic" => (_: Long, _: Message) => UTF8String.fromString(topic)
-      case "queue_id" => (_: Long, _: Message) => queueId
-      case "offset" => (o: Long, _: Message) => o
-      case "born_ts" => (_: Long, m: Message) => m.bornTs * 1000L // millis → micros
-      case "msg_key" => (_: Long, m: Message) => UTF8String.fromString(m.key)
-      case "tag" => (_: Long, m: Message) => UTF8String.fromString(m.tag)
-      case "properties" => (_: Long, m: Message) => {
-        val keys = new Array[Any](m.properties.size)
-        val vals = new Array[Any](m.properties.size)
-        var i = 0
-        m.properties.foreach { case (k, v) =>
-          keys(i) = UTF8String.fromString(k); vals(i) = UTF8String.fromString(v); i += 1
-        }
-        ArrayBasedMapData(keys, vals)
-      }
-      case "body" => (_: Long, m: Message) => UTF8String.fromString(m.body)
-      case other => throw new IllegalArgumentException(s"unknown column: $other")
-    }
-
-  def toRow(offset: Long, m: Message): InternalRow =
-    InternalRow.fromSeq(extractors.map(_(offset, m)).toIndexedSeq)
-}
 
 /** Continuous-mode position of one queue reader: the NEXT offset to read. */
 final case class QueuePartitionOffset(queueId: Int, offset: Long) extends PartitionOffset
@@ -154,33 +121,27 @@ class ContinuousQueueReader(rootDir: String, tagFilter: String,
     split: ContinuousQueueSplit, pollMs: Long)
     extends ContinuousPartitionReader[InternalRow] {
 
-  private val acceptedTags: Set[String] =
-    if (tagFilter == null || tagFilter == "*" || tagFilter.isEmpty) null
-    else tagFilter.split("\\|\\|").map(_.trim).toSet
-
-  private val projector = new QueueRowProjector(split.topic, split.queueId, requiredSchema)
+  private val decoder = new QueueRowDecoder(split.topic, split.queueId, requiredSchema,
+    tagFilter, propertyFilter)
+  private val file = TopicLog.queueFile(rootDir, split.topic, split.queueId)
 
   private var nextOffset: Long = split.startOffset
-  private var chunk: TopicLog.RangeIterator = null
+  private var chunk: TopicLog.LineReader = null
   private var current: InternalRow = _
 
   override def next(): Boolean = {
     while (true) {
-      if (chunk != null && chunk.hasNext) {
-        val (offset, m) = chunk.next()
-        nextOffset = offset + 1
-        val tagOk = acceptedTags == null || acceptedTags.contains(m.tag)
-        val propsOk = propertyFilter.isEmpty ||
-          propertyFilter.forall { case (k, v) => m.properties.get(k).contains(v) }
-        if (tagOk && propsOk) {
-          current = projector.toRow(offset, m)
+      if (chunk != null && chunk.next()) {
+        nextOffset = chunk.offset + 1
+        val row = decoder.decode(chunk.buf, chunk.lineStart, chunk.lineEnd, chunk.offset)
+        if (row != null) {
+          current = row
           return true
         }
       } else {
         if (chunk != null) { chunk.close(); chunk = null }
         val max = TopicLog.maxOffset(rootDir, split.topic, split.queueId)
-        if (max > nextOffset)
-          chunk = TopicLog.readRange(rootDir, split.topic, split.queueId, nextOffset, max)
+        if (max > nextOffset) chunk = new TopicLog.LineReader(file, nextOffset, max)
         else Thread.sleep(pollMs) // throws InterruptedException at query stop
       }
     }

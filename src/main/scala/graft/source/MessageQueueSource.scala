@@ -4,7 +4,6 @@ import java.util
 
 import graft.config.{GraftOptions, StartMode}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -12,7 +11,6 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, 
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * DataSourceV2 provider for the file-backed message queue:
@@ -104,7 +102,8 @@ class MessageQueueTable(val opts: GraftOptions) extends Table
 
 /**
  * Pushdown-aware scan builder:
- *  - column pruning: the reader materializes only requested columns;
+ *  - column pruning: the reader decodes only the requested columns from a
+ *    log line's bytes (the other fields are only delimited and checked);
  *  - `tag = 'x'` is consumed entirely at the reader (never re-evaluated);
  *  - born_ts bounds translate to per-queue OFFSET ranges via searchOffset —
  *    queue logs are born-ts-ordered like broker commit logs, so a time
@@ -229,37 +228,32 @@ class QueueReaderFactory(rootDir: String, tag: String,
 }
 
 /**
- * Reads one queue's offset range into rows; tag filtering happens here so
- * non-matching messages never leave the scan (reference reader poll loop:
+ * Reads one queue's offset range into rows; tag and property filtering
+ * happen here, on the line's raw bytes, so non-matching messages are never
+ * decoded (reference reader poll loop:
  * source/reader/RocketMQPartitionSplitReader.java:90-180).
  */
 class QueuePartitionReader(rootDir: String, tagFilter: String,
     propertyFilter: Map[String, String], requiredSchema: StructType, split: QueueSplit)
     extends PartitionReader[InternalRow] {
 
-  private val acceptedTags: Set[String] =
-    if (tagFilter == null || tagFilter == "*" || tagFilter.isEmpty) null
-    else tagFilter.split("\\|\\|").map(_.trim).toSet
-
-  private val iter = TopicLog.readRange(
-    rootDir, split.topic, split.queueId, split.startingOffset, split.stoppingOffset)
+  private val decoder = new QueueRowDecoder(split.topic, split.queueId, requiredSchema,
+    tagFilter, propertyFilter)
+  private val lines = new TopicLog.LineReader(
+    TopicLog.queueFile(rootDir, split.topic, split.queueId),
+    split.startingOffset, split.stoppingOffset)
   private var current: InternalRow = _
   private var messagesRead = 0L
   private var messagesFiltered = 0L
   private var bytesRead = 0L
 
   override def next(): Boolean = {
-    while (iter.hasNext) {
-      val (offset, m) = iter.next()
-      val tagOk = acceptedTags == null || acceptedTags.contains(m.tag)
-      // equality-conjunction property selector, applied before the row is
-      // materialized (reference: example/PropertyFilterExamples.java:33)
-      val propsOk = propertyFilter.isEmpty ||
-        propertyFilter.forall { case (k, v) => m.properties.get(k).contains(v) }
-      bytesRead += Metrics.utf8Length(m.body)
-      if (tagOk && propsOk) {
+    while (lines.next()) {
+      val row = decoder.decode(lines.buf, lines.lineStart, lines.lineEnd, lines.offset)
+      bytesRead += decoder.bodyBytes
+      if (row != null) {
         messagesRead += 1
-        current = toRow(offset, m)
+        current = row
         return true
       } else messagesFiltered += 1
     }
@@ -272,12 +266,8 @@ class QueuePartitionReader(rootDir: String, tagFilter: String,
       Metrics.Value(Metrics.MessagesFiltered, messagesFiltered),
       Metrics.Value(Metrics.BytesRead, bytesRead))
 
-  // column-pruned projection, shared with the continuous reader
-  private val projector = new QueueRowProjector(split.topic, split.queueId, requiredSchema)
-  private def toRow(offset: Long, m: Message): InternalRow = projector.toRow(offset, m)
-
   override def get(): InternalRow = current
-  override def close(): Unit = iter.close()
+  override def close(): Unit = lines.close()
 }
 
 /** Micro-batch offsets: queueId → next offset to read, JSON-encoded. */

@@ -1,6 +1,6 @@
 package graft.source
 
-import java.io.{BufferedReader, BufferedWriter, File, FileReader, FileWriter}
+import java.io.{BufferedWriter, File, FileInputStream, FileWriter}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
@@ -19,9 +19,15 @@ final case class Message(
  * line, offset = line number. Stands in for the broker so all offset/split
  * semantics stay real (see SURVEY.md §3).
  *
- * Line format (tab-separated): `bornTs \t key \t tag \t k=v;k=v \t body`,
- * with backslash/tab/newline/CR escaped inside every field, so arbitrary
- * bodies round-trip. Append-only; one writer per queue (MQ semantics).
+ * Line format (UTF-8, tab-separated):
+ * `bornTs \t key \t tag \t k=v;k=v \t body`, with backslash, tab,
+ * newline, CR, `;` and `=` escaped inside every field, so arbitrary bodies
+ * round-trip. Properties are written sorted by key. Append-only; one writer
+ * per queue (MQ semantics).
+ *
+ * Reads never decode a line as a String: [[LineReader]] finds lines in the
+ * raw bytes, and [[LogCodec]] / [[QueueRowDecoder]] decode the fields a
+ * caller needs straight from those bytes.
  */
 object TopicLog {
 
@@ -65,32 +71,6 @@ object TopicLog {
     sb.toString
   }
 
-  /** First index of `sep` not preceded by an escape backslash. */
-  private def indexOfUnescaped(s: String, sep: Char, from: Int): Int = {
-    var i = from
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\') i += 2
-      else if (c == sep) return i
-      else i += 1
-    }
-    -1
-  }
-
-  /** Split on unescaped occurrences of `sep`. */
-  private def splitUnescaped(s: String, sep: Char): Vector[String] = {
-    val out = Vector.newBuilder[String]
-    var start = 0
-    var idx = indexOfUnescaped(s, sep, 0)
-    while (idx >= 0) {
-      out += s.substring(start, idx)
-      start = idx + 1
-      idx = indexOfUnescaped(s, sep, start)
-    }
-    out += s.substring(start)
-    out.result()
-  }
-
   private[source] def unescape(s: String): String = {
     val sb = new StringBuilder(s.length)
     var i = 0
@@ -116,21 +96,10 @@ object TopicLog {
     s"${m.bornTs}\t${escape(m.key)}\t${escape(m.tag)}\t$props\t${escape(m.body)}"
   }
 
+  /** Decodes one line given as a String (no terminator). */
   private[source] def parseLine(line: String): Message = {
-    val parts = line.split("\t", 5)
-    val props =
-      if (parts.length < 4 || parts(3).isEmpty) Map.empty[String, String]
-      else splitUnescaped(parts(3), ';').iterator.filter(_.nonEmpty).map { kv =>
-        val eq = indexOfUnescaped(kv, '=', 0)
-        require(eq >= 0, s"malformed property entry: $kv")
-        unescape(kv.substring(0, eq)) -> unescape(kv.substring(eq + 1))
-      }.toMap
-    Message(
-      bornTs = parts(0).toLong,
-      key = unescape(parts(1)),
-      tag = unescape(parts(2)),
-      properties = props,
-      body = if (parts.length < 5) "" else unescape(parts(4)))
+    val bytes = line.getBytes(StandardCharsets.UTF_8)
+    LogCodec.message(bytes, 0, bytes.length, 0L)
   }
 
   // ---- IO ----
@@ -195,27 +164,9 @@ object TopicLog {
     // a shorter file means the log was deleted and recreated — rescan
     val (from, base) = if (fileLen < countedBytes) (0L, 0L) else (countedBytes, cachedLines)
     if (fileLen == from) return base
-    val in = new java.io.FileInputStream(file)
-    try {
-      var skipped = 0L
-      while (skipped < from) skipped += in.skip(from - skipped)
-      val buf = new Array[Byte](64 * 1024)
-      var lines = base
-      var pos = from
-      var lastNl = from
-      var n = in.read(buf)
-      while (n > 0) {
-        var i = 0
-        while (i < n) {
-          if (buf(i) == '\n') { lines += 1; lastNl = pos + i + 1 }
-          i += 1
-        }
-        pos += n
-        n = in.read(buf)
-      }
-      lineCountCache.put(key, (lastNl, lines))
-      lines
-    } finally in.close()
+    val (lines, lastNl) = countLines(file, from)
+    lineCountCache.put(key, (lastNl, base + lines))
+    base + lines
   }
 
   /** (complete lines, bytes up to the last newline) of a queue log by full
@@ -223,13 +174,20 @@ object TopicLog {
     * raw content as committed instead of shadowing it. */
   private[graft] def sizeInfo(root: String, topic: String, queueId: Int): (Long, Long) = {
     val file = queueFile(root, topic, queueId)
-    if (!file.exists()) return (0L, 0L)
-    val in = new java.io.FileInputStream(file)
+    if (!file.exists()) (0L, 0L) else countLines(file, 0L)
+  }
+
+  /** (newlines in `file` from byte `from` on, the byte position just past
+    * the last of them, or `from` when there is none). */
+  private def countLines(file: File, from: Long): (Long, Long) = {
+    val in = new FileInputStream(file)
     try {
+      var skipped = 0L
+      while (skipped < from) skipped += in.skip(from - skipped)
       val buf = new Array[Byte](64 * 1024)
       var lines = 0L
-      var pos = 0L
-      var lastNl = 0L
+      var pos = from
+      var lastNl = from
       var n = in.read(buf)
       while (n > 0) {
         var i = 0
@@ -245,52 +203,115 @@ object TopicLog {
   }
 
   /** First offset whose bornTs >= ts; maxOffset if none (logs are
-    * time-ordered per queue, like broker commit logs). Capped at
-    * maxOffset: the raw scan sees lines past a ledgered topic's committed
-    * high-water mark (and a torn tail line), and an endTimeMs-bounded read
-    * using this as its stop offset must not expose either. */
+    * time-ordered per queue, like broker commit logs). Only the first
+    * maxOffset lines are scanned: lines past a ledgered topic's committed
+    * high-water mark, and a torn tail line, are not readable, and an
+    * endTimeMs-bounded read uses this as its stop offset. */
   def searchOffset(root: String, topic: String, queueId: Int, ts: Long): Long = {
-    val file = queueFile(root, topic, queueId)
-    if (!file.exists()) return 0L
-    val in = new BufferedReader(new FileReader(file, StandardCharsets.UTF_8))
-    val found = try {
-      var offset = 0L
-      var line = in.readLine()
-      var res = -1L
-      while (line != null && res < 0) {
-        if (line.substring(0, line.indexOf('\t')).toLong >= ts) res = offset
-        else { offset += 1; line = in.readLine() }
+    val lines = new LineReader(queueFile(root, topic, queueId), 0L,
+      maxOffset(root, topic, queueId))
+    try {
+      while (lines.next()) {
+        if (LogCodec.bornTs(lines.buf, lines.lineStart, lines.lineEnd, lines.offset) >= ts)
+          return lines.offset
       }
-      if (res < 0) offset else res
-    } finally in.close()
-    math.min(found, maxOffset(root, topic, queueId))
+      lines.offset + 1
+    } finally lines.close()
+  }
+
+  /** The lines [startOffset, stopOffset) of a queue log, read as bytes: after
+    * each `next()` the line is `buf(lineStart until lineEnd)` (no
+    * terminator) at `offset`. Skipping to startOffset only counts newlines.
+    * A last line with no newline is still returned (callers bound reads by
+    * maxOffset, which does not count it), and a CR before a newline is
+    * dropped. The buffer grows to hold a line longer than it. */
+  final class LineReader(file: File, startOffset: Long, stopOffset: Long)
+      extends AutoCloseable {
+    private var in: FileInputStream =
+      if (!file.exists() || startOffset >= stopOffset) null else new FileInputStream(file)
+    var buf: Array[Byte] = new Array[Byte](if (in == null) 0 else 64 * 1024)
+    var lineStart = 0
+    var lineEnd = 0
+    /** Offset of the current line (startOffset - 1 before the first). */
+    var offset: Long = startOffset - 1
+    private var pos = 0
+    private var limit = 0
+    private var skipped = false
+
+    /** Keeps buf(pos until limit) and reads more after it (growing buf if
+      * that is all of it); false at end of file. */
+    private def fill(): Boolean = {
+      if (pos > 0) {
+        System.arraycopy(buf, pos, buf, 0, limit - pos)
+        limit -= pos
+        pos = 0
+      } else if (limit == buf.length) buf = java.util.Arrays.copyOf(buf, buf.length * 2)
+      val n = in.read(buf, limit, buf.length - limit)
+      if (n > 0) { limit += n; true } else false
+    }
+
+    private def skipToStart(): Boolean = {
+      var left = startOffset
+      while (left > 0) {
+        val nl = LogCodec.indexOf(buf, '\n', pos, limit)
+        if (nl >= 0) { pos = nl + 1; left -= 1 }
+        else { pos = limit; if (!fill()) return false }
+      }
+      true
+    }
+
+    private def setLine(from: Int, to: Int): Boolean = {
+      lineStart = from
+      lineEnd = if (to > from && buf(to - 1) == '\r') to - 1 else to
+      offset += 1
+      true
+    }
+
+    def next(): Boolean = {
+      if (in == null) return false
+      if (!skipped) {
+        skipped = true
+        if (!skipToStart()) { close(); return false }
+      }
+      if (offset + 1 >= stopOffset) { close(); return false }
+      var scanned = 0
+      while (true) {
+        val nl = LogCodec.indexOf(buf, '\n', pos + scanned, limit)
+        if (nl >= 0) {
+          val from = pos
+          pos = nl + 1
+          return setLine(from, nl)
+        }
+        scanned = limit - pos
+        if (!fill()) {
+          close()
+          if (scanned == 0) return false
+          pos = limit
+          return setLine(0, limit)
+        }
+      }
+      false // unreachable
+    }
+
+    override def close(): Unit = if (in != null) { in.close(); in = null }
   }
 
   /** Iterator over a queue range that can be closed before exhaustion
     * (a LIMITed scan stops early; the reader must not leak the handle). */
   final class RangeIterator(file: File, startOffset: Long, stopOffset: Long)
       extends Iterator[(Long, Message)] with AutoCloseable {
-    private val in =
-      if (!file.exists() || startOffset >= stopOffset) null
-      else new BufferedReader(new FileReader(file, StandardCharsets.UTF_8))
-    private var offset = -1L
-    private var nextLine: String = if (in == null) null else advance()
+    private val lines = new LineReader(file, startOffset, stopOffset)
+    private var ahead = lines.next()
 
-    private def advance(): String = {
-      var line = in.readLine()
-      offset += 1
-      while (line != null && offset < startOffset) { line = in.readLine(); offset += 1 }
-      if (line == null || offset >= stopOffset) { in.close(); null } else line
-    }
-    override def hasNext: Boolean = nextLine != null
+    override def hasNext: Boolean = ahead
     override def next(): (Long, Message) = {
-      val out = (offset, parseLine(nextLine))
-      nextLine = advance()
+      if (!ahead) throw new NoSuchElementException("end of queue range")
+      val out = (lines.offset,
+        LogCodec.message(lines.buf, lines.lineStart, lines.lineEnd, lines.offset))
+      ahead = lines.next()
       out
     }
-    override def close(): Unit = {
-      if (in != null && nextLine != null) { in.close(); nextLine = null }
-    }
+    override def close(): Unit = { lines.close(); ahead = false }
   }
 
   /** Read messages with offsets in [startOffset, stopOffset). */

@@ -1,5 +1,6 @@
 package graft.source
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -106,5 +107,49 @@ class TopicLogSpec extends AnyFunSuite {
     assert(TopicLog.maxOffset(root, "t", 0) === 0)
     TopicLog.append(root, "t", 0, (1 to 2).map(i => msg(i, "y")).iterator)
     assert(TopicLog.maxOffset(root, "t", 0) === 2)
+  }
+
+  private def writeRaw(root: String, text: String): Unit = {
+    val f = TopicLog.queueFile(root, "t", 0)
+    f.getParentFile.mkdirs()
+    Files.write(f.toPath, text.getBytes(UTF_8))
+  }
+
+  test("searchOffset scans only the first maxOffset lines (a torn tail is not read)") {
+    val root = tmpRoot()
+    // a crashed writer left "30" with no tab and no newline
+    writeRaw(root, "100\tk\tA\t\tb1\n200\tk\tA\t\tb2\n30")
+    assert(TopicLog.maxOffset(root, "t", 0) === 2)
+    assert(TopicLog.searchOffset(root, "t", 0, 1000) === 2)
+    assert(TopicLog.searchOffset(root, "t", 0, 150) === 1)
+    assert(TopicLog.searchOffset(root, "t", 0, 100) === 0)
+  }
+
+  test("a line longer than the read buffer reads back whole, between its neighbours") {
+    val root = tmpRoot()
+    val long = Message(2L, "k", "t", Map("p" -> "v"), "é中\\\t😀;=" * 20000) // 340 KB escaped
+    val ms = Seq(msg(1, "a"), long, msg(3, "c"), msg(4, "d"))
+    TopicLog.append(root, "t", 0, ms.iterator)
+    assert(TopicLog.readRange(root, "t", 0, 0, 4).toSeq === ms.indices.map(i => (i.toLong, ms(i))))
+    assert(TopicLog.readRange(root, "t", 0, 2, 4).toSeq === Seq((2L, ms(2)), (3L, ms(3))))
+    assert(TopicLog.searchOffset(root, "t", 0, 3) === 2)
+  }
+
+  test("readRange returns an unterminated last line; CRLF ends a line like LF") {
+    val root = tmpRoot()
+    writeRaw(root, "1\tk\tA\t\tb1\r\n2\tk\tB\t\tb2")
+    assert(TopicLog.readRange(root, "t", 0, 0, Long.MaxValue).toSeq === Seq(
+      (0L, Message(1L, "k", "A", Map.empty, "b1")), (1L, Message(2L, "k", "B", Map.empty, "b2"))))
+    assert(TopicLog.readRange(root, "t", 0, 1, 2).map(_._2.body).toSeq === Seq("b2"))
+    assert(TopicLog.readRange(root, "t", 0, 2, 9).isEmpty)
+  }
+
+  test("a malformed line fails the read") {
+    val root = tmpRoot()
+    writeRaw(root, "1\tk\tA\t\tok\nnot-a-line\n")
+    val it = TopicLog.readRange(root, "t", 0, 0, 2)
+    assert(it.next()._2.body === "ok")
+    intercept[IllegalArgumentException](it.next())
+    it.close()
   }
 }
