@@ -13,10 +13,37 @@ import org.apache.spark.sql.SparkSession
  *    partition's shuffle block stays a few hundred MB);
  *  - 128 MB file-split target so scan tasks amortize parquet footer reads
  *    without starving parallelism;
+ *  - a generated-code cache that holds graft's whole working set
+ *    ([[CodegenCacheEntries]]);
  *  - graft's SQL functions registered;
  *  - nanosecond-parquet reads enabled (the events table needs it).
  */
 object GraftSession {
+
+  /**
+   * Entry count of Spark's generated-class cache
+   * (`spark.sql.codegen.cache.maxEntries`, Spark's default 100). Every
+   * session graft builds sets it from here; a caller's own `.config` of the
+   * same key still wins.
+   *
+   * Why 2048: graft reruns the same compiled plans (curation passes, one
+   * query per epoch), and that reuse only pays if the compiled classes
+   * stay cached. Measured working sets, in distinct generated classes: the
+   * heavy_hitters + corpus_assemble + ann_pq trio about 190 (their
+   * benchmark pass), the heaviest single key 66 (corpus_assemble), all 128
+   * batch `SparkEntry` keys 1,509 at sf0.01 and 1,510 at sf0.1, plus ~30
+   * that a second pass adds where a plan changes after its first run. At
+   * 100 entries every pass recompiled: the trio ~177 classes per pass, and
+   * hybrid_search 90 compiles for 32 distinct classes within one run.
+   * Memory: a cached class costs about 30 KB of heap (mostly its generated
+   * source text); all batch keys cached cost about +42 MB heap and +11 MB
+   * metaspace.
+   *
+   * The setting is a static SQL conf: Spark reads it once, when the first
+   * code generation in the JVM builds the cache, so a value set on a later
+   * session — or on a session reused via `getOrCreate` — has no effect.
+   */
+  val CodegenCacheEntries = 2048
 
   def builder(appName: String = "graft"): SparkSession.Builder =
     SparkSession.builder()
@@ -28,6 +55,7 @@ object GraftSession {
       .config("spark.sql.files.maxPartitionBytes", 128L * 1024 * 1024)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
 
   /** Local session for tests/benchmarks. */
   def local(cores: Int, appName: String = "graft"): SparkSession = {

@@ -67,6 +67,7 @@ object MemLane {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", partitions)
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", GraftSession.CodegenCacheEntries)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val heapMb = Runtime.getRuntime.maxMemory() / (1024L * 1024L)

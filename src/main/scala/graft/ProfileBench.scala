@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.streaming.state.StateStore
 
 /** Measurement-only sibling of [[Bench]]: times each query with the same
@@ -9,6 +11,9 @@ import org.apache.spark.sql.execution.streaming.state.StateStore
   * Spark jobs and stages it launched and the summed executor task time —
   * separating cluster work from driver/scheduling overhead (guide §1: decide
   * whether time goes to compute, shuffle, or the driver before optimizing).
+  * It also counts the classes Spark's code generator compiled for the query
+  * and their compile time: with the codegen cache holding the working set
+  * ([[GraftSession.CodegenCacheEntries]]), a second pass compiles ~nothing.
   * Never writes the board sidecars; output is one JSON line per query.
   */
 object ProfileBench {
@@ -54,6 +59,7 @@ object ProfileBench {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", GraftSession.CodegenCacheEntries)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val acc = new Acc
@@ -72,17 +78,22 @@ object ProfileBench {
       // settle listener-bus drain from the previous query
       Thread.sleep(50)
       acc.reset()
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val compileNs0 = CodeGenerator.compileTime
       val t0 = System.nanoTime()
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       catch { case e: Throwable =>
         System.err.println(s"[profile] $name FAILED: $e"); return }
       val wall = (System.nanoTime() - t0) / 1e9
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      val compileMs = (CodeGenerator.compileTime - compileNs0) / 1e6
       if (streamingEntries(name)) StateStore.stop()
       Thread.sleep(50) // let stage-completed events drain
       println(f"""{"q":"$name","wall":$wall%.3f,"jobs":${acc.jobs},""" +
         f""""stages":${acc.stages},"tasks":${acc.tasks},""" +
         f""""taskSec":${acc.taskNanos / 1e9}%.3f,""" +
-        f""""shufR":${acc.shuffleReadB},"shufW":${acc.shuffleWriteB}}""")
+        f""""shufR":${acc.shuffleReadB},"shufW":${acc.shuffleWriteB},""" +
+        f""""compiles":$compiles,"compileMs":$compileMs%.1f}""")
     }
     val passes = sys.env.getOrElse("SPARK_GRAFT_PROFILE_PASSES", "2").toInt
     for (_ <- 0 until passes) sel.foreach { case (n, f) => once(n, f) }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.graftshim.JobProperties
 import graft.util.Materialize.MaterializeOps
 import org.apache.spark.sql.functions._
 
@@ -933,11 +934,14 @@ object CorpusPipeline {
     // sequential per-job driver latency — a driver future lets the tiny
     // benchmark chain back-fill the quality pass's scheduling gaps. The
     // checkpointed table then broadcasts into the fused screen below,
-    // exactly the set [[decontaminate]] would derive inline.
-    val benchShinglesF = scala.concurrent.Future {
+    // exactly the set [[decontaminate]] would derive inline. Its jobs carry
+    // the caller's job group, tags and description like every other job of
+    // the composition.
+    val benchShinglesF = JobProperties.future(benchmark.sparkSession.sparkContext,
+        scala.concurrent.ExecutionContext.global) {
       benchmark.select(explode(Dedup.shingleHashes(col("text"), gramN)).as("sh"))
         .distinct().cutLineage()
-    }(scala.concurrent.ExecutionContext.global)
+    }
     // the quality verdict id-set is consumed on both sides of the cfrac
     // checkpoint (cfrac build + survivor join) — checkpoint the NARROW
     // verdict, not `kept` itself (one id column vs re-materializing the

@@ -22,6 +22,9 @@ object SparkSpec {
       // what a production session gets via GraftSession.builder: SQL
       // function registration + the property-predicate pushdown rule
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+      // and its codegen cache size: a static conf, read at the JVM's first
+      // code generation, so the first session built in the JVM sets it
+      .config("spark.sql.codegen.cache.maxEntries", GraftSession.CodegenCacheEntries)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -225,6 +225,50 @@ class CorpusPipelineSpec extends SparkSpec {
     assert(out.nonEmpty)
   }
 
+  test("assembleCorpus: every job it launches carries the caller's job group and tag") {
+    import java.util.Properties
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+    import scala.concurrent.{ExecutionContext, Future}
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    // start every worker of the global pool now, outside any job group: a
+    // worker created during the call would inherit the caller's properties
+    // and hide their loss
+    val workers = Runtime.getRuntime.availableProcessors
+    val started = new CountDownLatch(workers)
+    (1 to workers).foreach(_ => Future {
+      started.countDown(); started.await(10, TimeUnit.SECONDS)
+    }(ExecutionContext.global))
+    started.await(10, TimeUnit.SECONDS)
+    val jobs = new ConcurrentLinkedQueue[Properties]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).getOrElse(new Properties))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("assemble-group", "assembleCorpus under a job group")
+      sc.addJobTag("assemble-tag")
+      try CorpusPipeline.corpusAssemble(spark, sfDir).collect()
+      finally { sc.clearJobGroup(); sc.removeJobTag("assemble-tag") }
+      // one marker job: the listener sees it after every earlier job
+      sc.setJobGroup("assemble-marker", "marker")
+      try spark.range(1).collect() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      def group(p: Properties) = p.getProperty("spark.jobGroup.id")
+      while (!jobs.asScala.exists(group(_) == "assemble-marker") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      val launched = jobs.asScala.toSeq.filterNot(group(_) == "assemble-marker")
+      assert(launched.size > 2)
+      launched.foreach { p =>
+        assert(group(p) === "assemble-group")
+        assert(Option(p.getProperty("spark.job.tags")).toSeq
+          .flatMap(_.split(",")).contains("assemble-tag"))
+      }
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("unigramLogProb: repeated-common-token docs score above rare-token docs") {
     import spark.implicits._
     val corpus = Seq(
